@@ -1645,7 +1645,13 @@ def q_streaming_upsert_store(spark, sf_dir):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(300)
+        if not q.awaitTermination(300):
+            # a stall is a timeout, not a census that hashes wrong
+            q.stop()
+            raise TimeoutError(
+                "streaming_upsert_store: the availableNow query did not "
+                "finish within 300 s"
+            )
         census = (
             scan_encoded(spark, out, ["url", "text", "lang", "version"])
             .groupBy("lang")

@@ -16,20 +16,21 @@ wraps the chunk store that :mod:`choetl_spark.engine` /
 
 Architecture (the same no-JVM-boundary shape as
 :mod:`choetl_spark.direct`, in reverse): the DRIVER plans everything
-from sidecar metadata with **zero Spark jobs** — ledger parquet (tiny,
-read with pyarrow), the manifest JSON, and the chunk files' parquet
-FOOTERS (row-group ``part_id`` min/max = the split-pruning signal
-``compact_store`` clusters for). Each task then opens only its split's
-row groups with pyarrow, filters chunk rows to its committed
-``(part_id, attempt_id)`` keys, and runs the shared pure-Python decode
-kernel (:func:`choetl_spark.engine._make_decode_kernel`) — payload
-bytes cross the JVM boundary exactly once, as final decoded Arrow
-batches. The write path mirrors it: each task runs the shared encode
-kernel (:func:`choetl_spark.engine._make_encode_kernel`) and writes its
-chunk file directly; the driver ``commit()`` appends the ledger rows in
-ONE file — the store's standard crash protocol (chunks first, ledger
-second; orphans are invisible) means a failed/speculative task attempt
-can never corrupt the table.
+from sidecar metadata with **zero Spark jobs** — the ledger (resolved
+by :func:`choetl_spark.ledger.ledger_state`), the manifest JSON, and
+the chunk files' parquet FOOTERS (row-group ``part_id`` min/max = the
+split-pruning signal ``compact_store`` clusters for). Each task then
+opens only its split's row groups with pyarrow, filters chunk rows to
+its committed ``(part_id, attempt_id)`` keys, and runs the shared
+pure-Python decode kernel (:func:`choetl_spark.engine.
+_make_decode_kernel`) — payload bytes cross the JVM boundary exactly
+once, as final decoded Arrow batches. The write path is the same shape
+turned around: each task runs the shared encode kernel
+(:func:`choetl_spark.engine._make_encode_kernel`) and writes its chunk
+file directly; the driver ``commit()`` appends the ledger rows in ONE
+file, renamed into place — the store's standard crash protocol (chunks
+first, ledger second; orphans are invisible) means a failed/speculative
+task attempt can never corrupt the table.
 
 Semantics parity is pinned by tests that diff every path against the
 primary readers (``scan_encoded`` / ``read_encoded``): commit
@@ -115,114 +116,19 @@ from choetl_spark.engine import (
 from choetl_spark.deletes import _deletes_dir
 from choetl_spark.eqdeletes import _eq_dir
 from choetl_spark.ledger import (
-    LEDGER_SCHEMA_DDL,
+    LEDGER_SCHEMA,
     _chunks_dir,
-    _ledger_dir,
+    _read_parquet_dir,
     _widened_dtype,
+    _write_ledger_file,
+    ledger_state,
     manifest_data_items,
-    min_time_travel_seq,
+    next_epoch,
     physical_name,
     read_manifest,
     reserved_physicals,
     write_manifest,
 )
-
-# ---------------------------------------------------------------------------
-# driver-side metadata (pure pyarrow — zero Spark jobs)
-# ---------------------------------------------------------------------------
-
-_LEDGER_COLS = ["part_id", "attempt_id", "run_seq", "status", "codec_map"]
-
-
-def _read_parquet_dir(d: str, columns: list[str] | None = None) -> pa.Table | None:
-    """Schema-lenient union read of every parquet file in ``d`` (the
-    pyarrow analog of ``mergeSchema`` — stores resumed across engine
-    upgrades mix footers with/without newer columns)."""
-    paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
-    if not paths:
-        return None
-    tables = []
-    for p in paths:
-        t = pq.read_table(p)
-        if columns is not None:
-            keep = [c for c in columns if c in t.column_names]
-            t = t.select(keep)
-        tables.append(t)
-    return pa.concat_tables(tables, promote_options="default")
-
-
-def _ledger_table(out_dir: str) -> pa.Table | None:
-    t = _read_parquet_dir(_ledger_dir(out_dir), _LEDGER_COLS)
-    if t is None:
-        return None
-    names = t.column_names
-    n = t.num_rows
-    if "run_seq" not in names:
-        t = t.append_column("run_seq", pa.array([1] * n, pa.int64()))
-    if "attempt_id" not in names:
-        t = t.append_column("attempt_id", pa.nulls(n, pa.string()))
-    if "codec_map" not in names:
-        t = t.append_column("codec_map", pa.nulls(n, pa.string()))
-    return t
-
-
-def _ledger_state(out_dir: str, as_of: int | None = None) -> dict:
-    """Driver-side snapshot resolution — the pure-pyarrow mirror of
-    :func:`choetl_spark.ledger.read_encoded`'s ledger joins. Returns
-    live commit keys, delete commits, eq-delete presence, max epoch."""
-    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
-        raise ValueError(
-            f"snapshot as_of={as_of} has been expired; the oldest "
-            f"readable epoch is {min_time_travel_seq(out_dir)}"
-        )
-    t = _ledger_table(out_dir)
-    state = {
-        "live": {},  # part_id -> set of attempt_id (None = legacy row)
-        "delete_ids": set(),
-        "eq_commits": [],  # (delete_id, run_seq, key_col)
-        "part_seq": {},  # part_id -> first done epoch (eq eligibility)
-        "max_seq": 0,
-        "max_part": -1,  # over EVERY ledger row (writer id allocation)
-    }
-    if t is None:
-        return state
-    pid = t.column("part_id").to_pylist()
-    att = t.column("attempt_id").to_pylist()
-    seq = [s if s is not None else 1 for s in t.column("run_seq").to_pylist()]
-    status = t.column("status").to_pylist()
-    cmap = t.column("codec_map").to_pylist()
-    state["max_seq"] = max(seq, default=0)
-    state["max_part"] = max(
-        (p for p in pid if p is not None), default=-1
-    )
-    lim = int(as_of) if as_of is not None else None
-    done: dict[int, set] = {}
-    retired: set[int] = set()
-    for i in range(len(pid)):
-        if lim is not None and seq[i] > lim:
-            continue
-        st = status[i]
-        if st == "done":
-            done.setdefault(pid[i], set()).add(att[i])
-            prev = state["part_seq"].get(pid[i])
-            if prev is None or seq[i] < prev:
-                state["part_seq"][pid[i]] = seq[i]
-        elif st == "retired":
-            retired.add(pid[i])
-        elif st == "delete":
-            state["delete_ids"].add(att[i])
-        elif st == "eqdelete":
-            # codec_map carries the delete's key column name
-            state["eq_commits"].append((att[i], seq[i], cmap[i]))
-        # "staged" rows awaiting their WAP verdict are invisible to
-        # readers (published copies re-appear as "done"); "aborted"
-        # attempts never surface
-    for p, atts in done.items():
-        if p in retired:
-            continue
-        state["live"][p] = atts
-    return state
-
 
 def _delete_positions(out_dir: str, state: dict) -> dict[int, "object"]:
     """Committed positional tombstones per part_id (numpy arrays) —
@@ -722,7 +628,7 @@ class ChoetlBatchReader(DataSourceReader):
         return unsupported
 
     def partitions(self):
-        state = _ledger_state(self._dir, self._as_of)
+        state = ledger_state(self._dir, self._as_of)
         tomb = _delete_positions(self._dir, state)
         eq = _eq_value_maps(self._dir, state, self._items)
         return plan_store_splits(
@@ -759,27 +665,14 @@ class ChoetlStreamReader(DataSourceStreamReader):
         return {"seq": self._start}
 
     def latestOffset(self):  # noqa: N802
-        t = _ledger_table(self._dir)
-        if t is None:
-            return {"seq": self._start}
-        seqs = [s or 1 for s in t.column("run_seq").to_pylist()]
-        return {"seq": max(max(seqs, default=0), self._start)}
+        return {"seq": max(ledger_state(self._dir)["max_seq"], self._start)}
 
     def partitions(self, start: dict, end: dict):
         lo, hi = int(start["seq"]), int(end["seq"])
-        t = _ledger_table(self._dir)
-        if t is None or hi <= lo:
+        if hi <= lo:
             return []
-        pid = t.column("part_id").to_pylist()
-        att = t.column("attempt_id").to_pylist()
-        seq = [s or 1 for s in t.column("run_seq").to_pylist()]
-        status = t.column("status").to_pylist()
-        change_epochs = {
-            seq[i]
-            for i in range(len(pid))
-            if lo < seq[i] <= hi
-            and status[i] in ("delete", "eqdelete", "retired")
-        }
+        state = ledger_state(self._dir)
+        change_epochs = {s for s in state["change_seqs"] if lo < s <= hi}
         if change_epochs and not self._skip_changes:
             raise ValueError(
                 f"ledger epochs {sorted(change_epochs)} are "
@@ -789,16 +682,13 @@ class ChoetlStreamReader(DataSourceStreamReader):
                 "semantics), or consume exact diffs with "
                 "ledger.read_changes."
             )
-        state = {"live": {}, "delete_ids": set(), "part_seq": {}}
-        for i in range(len(pid)):
-            if (
-                lo < seq[i] <= hi
-                and status[i] == "done"
-                and seq[i] not in change_epochs
-            ):
-                state["live"].setdefault(pid[i], set()).add(att[i])
+        live: dict[int, set] = {}
+        for s, keys in state["done_by_seq"].items():
+            if lo < s <= hi and s not in change_epochs:
+                for p, atts in keys.items():
+                    live[p] = live.get(p, set()) | atts
         return plan_store_splits(
-            self._dir, state, {}, None, self._target
+            self._dir, {"live": live, "part_seq": {}}, {}, None, self._target
         )
 
     def read(self, partition: StoreSplit):
@@ -832,21 +722,6 @@ _STORAGE_FROM_SPARK = {
     "double": "float64", "string": "string", "binary": "binary",
     "date": "date32",
 }
-
-_LEDGER_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int64()), ("fingerprint", pa.int64()),
-        ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
-        ("encoded_bytes", pa.int64()), ("n_chunks", pa.int64()),
-        ("codec_map", pa.string()), ("run_id", pa.string()),
-        ("run_seq", pa.int64()), ("status", pa.string()),
-        ("attempt_id", pa.string()),
-    ]
-)
-assert set(_LEDGER_PA_SCHEMA.names) == {
-    s.strip().split(" ")[0] for s in LEDGER_SCHEMA_DDL.split(",")
-}
-
 
 def _schema_manifest_fallback(schema, tz: str) -> dict:
     """Manifest entries from a Spark StructType — used only when a
@@ -905,8 +780,7 @@ class ChoetlWriter(DataSourceArrowWriter):
             )
         # fail fast on unsupported schemas (driver, before any task)
         _schema_manifest_fallback(schema, self._tz)
-        state = _ledger_state(self._dir)
-        self._base = state["max_part"] + 1
+        self._base = ledger_state(self._dir)["max_part"] + 1
 
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _TaskResult:
         from pyspark import TaskContext
@@ -986,8 +860,8 @@ class ChoetlWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages):
-        state = _ledger_state(self._dir)
-        run_seq = state["max_seq"] + 1
+        state = ledger_state(self._dir)
+        run_seq = next_epoch(self._dir)
         run_id = f"ds-write-{uuid.uuid4().hex[:12]}"
         rows = []
         observed: dict[str, str] = {}
@@ -1050,19 +924,12 @@ class ChoetlWriter(DataSourceArrowWriter):
         os.makedirs(self._dir, exist_ok=True)
         write_manifest(self._dir, merged)
         if rows:
-            os.makedirs(_ledger_dir(self._dir), exist_ok=True)
-            table = pa.Table.from_arrays(
-                [
-                    pa.array([r[i] for r in rows], _LEDGER_PA_SCHEMA.types[i])
-                    for i in range(len(_LEDGER_PA_SCHEMA.names))
-                ],
-                schema=_LEDGER_PA_SCHEMA,
+            table = pa.Table.from_pylist(
+                [dict(zip(LEDGER_SCHEMA.names, r)) for r in rows],
+                schema=LEDGER_SCHEMA,
             )
-            pq.write_table(
-                table,
-                os.path.join(
-                    _ledger_dir(self._dir), f"ds-{uuid.uuid4().hex}.parquet"
-                ),
+            _write_ledger_file(
+                self._dir, table, f"ds-{uuid.uuid4().hex}.parquet"
             )
 
     def abort(self, messages):

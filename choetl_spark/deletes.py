@@ -77,30 +77,20 @@ def read_delete_positions(
     state is post-``expire_snapshots`` (it drops the table when every
     survivor pointed at expired partitions), which is recognized by the
     expiry sidecar it always writes first."""
-    import os as _os
+    from choetl_spark.ledger import _expiry_path, ledger_state
 
-    from choetl_spark.ledger import _expiry_path, commit_meta, read_ledger
-
-    # commit_meta is driver-cached per ledger version: the common
-    # no-deletes store answers "has_delete?" with zero Spark jobs per
-    # scan (round-3 fix: this used to be a limit(1).count() job inside
-    # EVERY scan_encoded/point_lookup/agg_encoded call)
-    meta = commit_meta(spark, out_dir)
-    if not meta["delete_seqs"]:
-        # no committed delete epochs: any tombstone files on disk are
-        # orphans of a crashed delete_where — invisible by the commit
-        # rule, so readers skip the tombstone read entirely
+    # the driver-side resolver answers "which deletes are committed at
+    # this snapshot?" with zero Spark jobs
+    delete_ids = ledger_state(out_dir, as_of)["delete_ids"]
+    if not delete_ids:
+        # no delete committed at this snapshot: any tombstone files on
+        # disk are orphans of a crashed delete_where or belong to later
+        # epochs — readers skip the tombstone read entirely
         return None
-    if as_of is not None and meta["delete_seqs"][0] > int(as_of):
-        # deletes exist but all committed after this snapshot
-        return None
-    ledger = read_ledger(spark, out_dir)
     try:
         tomb = spark.read.parquet(_deletes_dir(out_dir))
     except Exception:
-        if ledger is not None and not _os.path.exists(
-            _expiry_path(out_dir)
-        ):
+        if not os.path.exists(_expiry_path(out_dir)):
             raise RuntimeError(
                 f"store at {out_dir} has committed delete epochs in "
                 "its ledger but no readable _deletes tombstone table "
@@ -111,24 +101,24 @@ def read_delete_positions(
                 "delete snapshots explicitly."
             )
         return None
-    if ledger is None:
-        return None
-    commits = ledger.filter(F.col("status") == "delete")
-    if as_of is not None:
-        commits = commits.filter(F.col("run_seq") <= int(as_of))
     return (
-        tomb.join(
-            F.broadcast(
-                commits.select(
-                    F.col("attempt_id").alias("delete_id")
-                ).distinct()
-            ),
-            "delete_id",
-            "semi",
-        )
+        _committed_tombstones(spark, tomb, delete_ids)
         .select("part_id", "row_pos")
         .distinct()
     )
+
+
+def _committed_tombstones(
+    spark: SparkSession, tomb: DataFrame, delete_ids: set
+) -> DataFrame:
+    """Tombstone rows of committed deletes: a semi-join against the
+    resolver's delete ids, shipped as a broadcast local frame."""
+    import pyarrow as pa
+
+    ids = spark.createDataFrame(
+        pa.table({"delete_id": pa.array(sorted(delete_ids), pa.string())})
+    )
+    return tomb.join(F.broadcast(ids), "delete_id", "semi")
 
 
 def delete_where(
@@ -159,13 +149,7 @@ def delete_where(
         prune_partitions_by_bloom,
         prune_partitions_by_stats,
     )
-    from choetl_spark.ledger import (
-        LEDGER_SCHEMA_DDL,
-        _ledger_dir,
-        read_encoded,
-        read_ledger,
-        read_manifest,
-    )
+    from choetl_spark.ledger import read_encoded, read_manifest
 
     from choetl_spark.engine import normalize_predicate_value as _n
 
@@ -285,15 +269,12 @@ def _commit_tombstones(
     MERGE snapshot; separate epochs would expose — and ``as_of`` time
     travel would permanently preserve — a state where matched keys
     have neither their old nor their new row)."""
-    from choetl_spark.ledger import LEDGER_SCHEMA_DDL, _ledger_dir, read_ledger
+    from choetl_spark.ledger import LEDGER_SCHEMA_DDL, _ledger_dir, next_epoch
 
     prior = read_delete_positions(spark, out_dir)
     if prior is not None:
         tomb = tomb.join(prior, ["part_id", "row_pos"], "left_anti")
-    ledger = read_ledger(spark, out_dir)
-    next_seq = 1
-    if ledger is not None:
-        next_seq = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    next_seq = next_epoch(out_dir)
     delete_id = uuid.uuid4().hex
     # del_seq in the FILES is informational (visibility is governed by
     # the ledger commit row's run_seq); a deferred commit doesn't know
@@ -366,17 +347,13 @@ def next_free_epoch(
     resume-skipped, dropping rows. Shared by :func:`upsert` and
     ``streaming.upsert_sink`` — the collision guard must not drift
     between the batch and streaming paths."""
-    from choetl_spark.ledger import read_ledger
+    from choetl_spark.ledger import ledger_state, next_epoch
 
-    ledger = read_ledger(spark, out_dir)
-    max_seq, max_part = 0, -1
-    if ledger is not None:
-        r = ledger.agg(
-            F.max("run_seq").alias("s"), F.max("part_id").alias("p")
-        ).collect()[0]
-        max_seq = r["s"] or 0
-        max_part = r["p"] if r["p"] is not None else -1
-    return max(max_seq, (max_part + num_partitions) // num_partitions) + 1
+    max_part = ledger_state(out_dir)["max_part"]
+    return max(
+        next_epoch(out_dir),
+        (max_part + num_partitions) // num_partitions + 1,
+    )
 
 
 def upsert(
@@ -514,6 +491,7 @@ def rewrite_partitions(
     from choetl_spark.engine import EncodeConfig, decode_dataframe
     from choetl_spark.ledger import (
         encode_with_resume,
+        ledger_state,
         read_encoded,
         read_ledger,
         read_manifest,
@@ -550,7 +528,7 @@ def rewrite_partitions(
     if not targets:
         return out
     # fresh ids: dense range above every id the ledger has ever seen
-    base = (ledger.agg(F.max("part_id")).collect()[0][0] or 0) + 1
+    base = max(ledger_state(out_dir)["max_part"], 0) + 1
     id_map = F.create_map(
         *[
             x
@@ -632,16 +610,17 @@ def rollback_to(
         LEDGER_SCHEMA_DDL,
         _ledger_dir,
         encode_with_resume,
+        ledger_state,
         min_time_travel_seq,
+        next_epoch,
         read_encoded,
-        read_ledger,
         read_manifest,
     )
 
     cfg = cfg or EncodeConfig()
     to_seq = int(to_seq)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["exists"]:
         raise ValueError(f"no ledger at {out_dir}; nothing to roll back")
     floor = min_time_travel_seq(out_dir)
     if to_seq < floor:
@@ -650,45 +629,21 @@ def rollback_to(
             f"readable epoch is {floor} (expire_snapshots reclaimed "
             "earlier history)"
         )
-    latest = ledger.agg(F.max("run_seq")).collect()[0][0] or 0
+    epoch = next_epoch(out_dir)
     out = {
         "rolled_back_to": to_seq,
         "rollback_epoch": None,
         "partitions_retired": 0,
         "partitions_rewritten": 0,
     }
-    if to_seq >= latest:
+    if to_seq >= epoch - 1:
         return out  # already at (or past) that snapshot — no-op
 
-    done = ledger.filter(F.col("status") == "done")
-    retired = ledger.filter(F.col("status") == "retired")
-
-    def visible(seq: int | None) -> DataFrame:
-        d, r = done, retired
-        if seq is not None:
-            d = d.filter(F.col("run_seq") <= seq)
-            r = r.filter(F.col("run_seq") <= seq)
-        return (
-            d.select("part_id")
-            .distinct()
-            .join(
-                F.broadcast(r.select("part_id").distinct()),
-                "part_id",
-                "left_anti",
-            )
-        )
-
-    p_t = visible(to_seq)
-    p_now = visible(None)
+    p_t = set(ledger_state(out_dir, to_seq)["live"])
+    p_now = set(state["live"])
     # all three sets are bounded by partitions CHURNED since to_seq
-    retire_only = [
-        r["part_id"]
-        for r in p_now.join(p_t, "part_id", "left_anti").collect()
-    ]
-    resurrect = [
-        r["part_id"]
-        for r in p_t.join(p_now, "part_id", "left_anti").collect()
-    ]
+    retire_only = p_now - p_t
+    resurrect = p_t - p_now
     # visible-at-both partitions with tombstones committed AFTER to_seq
     # (read through the hardened tombstone reader so a lost _deletes
     # table refuses instead of silently rolling deleted rows back in)
@@ -703,16 +658,14 @@ def rollback_to(
             if pos_t is not None
             else pos_now
         )
+        both = p_t & p_now
         dirty = [
             r["part_id"]
-            for r in late.select("part_id")
-            .distinct()
-            .join(p_t, "part_id", "semi")
-            .join(p_now, "part_id", "semi")
-            .collect()
+            for r in late.select("part_id").distinct().collect()
+            if r["part_id"] in both
         ]
-    rewrite_targets = sorted(set(resurrect) | set(dirty))
-    retire_set = sorted(set(retire_only) | set(dirty))
+    rewrite_targets = sorted(resurrect | set(dirty))
+    retire_set = sorted(retire_only | set(dirty))
     if not rewrite_targets and not retire_set:
         return out  # nothing changed since to_seq that readers can see
 
@@ -726,12 +679,12 @@ def rollback_to(
         spark.createDataFrame(
             [
                 (int(p), None, 0, 0, 0, 0, None, rid,
-                 int(latest) + 1, "retired", attempt_id)
+                 epoch, "retired", attempt_id)
                 for p in retire_set
             ],
             LEDGER_SCHEMA_DDL,
         ).write.mode("append").parquet(_ledger_dir(out_dir))
-        out["rollback_epoch"] = int(latest) + 1
+        out["rollback_epoch"] = epoch
         return out
 
     manifest = read_manifest(out_dir)
@@ -759,7 +712,7 @@ def rollback_to(
             ["_part_id", "_row_pos"],
             "left_anti",
         )
-    base = (ledger.agg(F.max("part_id")).collect()[0][0] or 0) + 1
+    base = max(state["max_part"], 0) + 1
     id_map = F.create_map(
         *[
             x
@@ -780,7 +733,7 @@ def rollback_to(
         run_id=rid,
         retire_part_ids=retire_set,
     )
-    out["rollback_epoch"] = int(latest) + 1
+    out["rollback_epoch"] = epoch
     return {**out, **res}
 
 
@@ -803,17 +756,10 @@ def compact_deletes(spark: SparkSession, out_dir: str) -> dict:
         tomb = spark.read.parquet(d)
     except Exception:
         return {"files_before": 0, "files_after": 0}
-    from choetl_spark.ledger import read_ledger
+    from choetl_spark.ledger import ledger_state
 
-    ledger = read_ledger(spark, out_dir)
-    keep = tomb.join(
-        F.broadcast(
-            ledger.filter(F.col("status") == "delete")
-            .select(F.col("attempt_id").alias("delete_id"))
-            .distinct()
-        ),
-        "delete_id",
-        "semi",
+    keep = _committed_tombstones(
+        spark, tomb, ledger_state(out_dir)["delete_ids"]
     )
 
     def _n_files(p: str) -> int:

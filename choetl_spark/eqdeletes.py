@@ -41,6 +41,7 @@ from __future__ import annotations
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 EQ_STATUS = "eqdelete"
@@ -108,7 +109,7 @@ def delete_by_key(
     from choetl_spark.ledger import (
         LEDGER_SCHEMA_DDL,
         _ledger_dir,
-        read_ledger,
+        next_epoch,
         read_manifest,
     )
 
@@ -122,10 +123,7 @@ def delete_by_key(
     if wrote is None:
         return {"n_values": 0, "run_seq": None, "delete_id": None}
     delete_id, n = wrote
-    ledger = read_ledger(spark, out_dir)
-    next_seq = 1
-    if ledger is not None:
-        next_seq = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    next_seq = next_epoch(out_dir)
     commit = spark.createDataFrame(
         [
             (
@@ -204,23 +202,12 @@ def eq_delete_positions(
         decode_dataframe,
         prune_partitions_by_bloom,
     )
-    from choetl_spark.ledger import (
-        commit_meta,
-        read_encoded,
-        read_ledger,
-        read_manifest,
-    )
+    from choetl_spark.ledger import ledger_state, read_encoded, read_manifest
 
-    # driver-cached per ledger version: a store with no equality
-    # deletes (the common case) answers with zero Spark jobs per scan
-    # (round-3 fix: this used to be a collect() + limit(1).count()
-    # inside every reader call)
-    meta = commit_meta(spark, out_dir)
-    rows = [
-        (aid, seq, col)
-        for aid, seq, col in meta["eq_commits"]
-        if as_of is None or seq <= int(as_of)
-    ]
+    # the driver-side resolver: a store with no equality deletes (the
+    # common case) answers with zero Spark jobs per scan
+    state = ledger_state(out_dir, as_of)
+    rows = state["eq_commits"]
     if not rows:
         return None
     if not os.path.isdir(_eq_root(out_dir)):
@@ -229,12 +216,16 @@ def eq_delete_positions(
             "but no readable _eq_deletes table — refusing to read (it "
             "would resurrect deleted rows)."
         )
-    if not meta["has_done"]:
+    if not state["part_seq"]:
         return None  # nothing ingested yet — no rows to delete
-    ledger = read_ledger(spark, out_dir)
-    done = ledger.filter(F.col("status") == "done")
-    part_seq = done.groupBy("part_id").agg(
-        F.min("run_seq").alias("_pseq")
+    pseq = state["part_seq"]
+    part_seq = spark.createDataFrame(
+        pa.table(
+            {
+                "part_id": pa.array(list(pseq), pa.int64()),
+                "_pseq": pa.array(list(pseq.values()), pa.int64()),
+            }
+        )
     )
     manifest = read_manifest(out_dir)
     # keys recorded before a rename resolve to their CURRENT name via
@@ -355,7 +346,7 @@ def upsert_by_key(
     """
     from choetl_spark.deletes import next_free_epoch
     from choetl_spark.engine import EncodeConfig
-    from choetl_spark.ledger import encode_with_resume, read_ledger
+    from choetl_spark.ledger import _ledger_table, encode_with_resume
     from choetl_spark.partitioning import plan_partitions
 
     cfg = cfg or EncodeConfig()
@@ -363,19 +354,14 @@ def upsert_by_key(
     if fresh_epoch:
         epoch = next_free_epoch(spark, out_dir, cfg.num_partitions)
     rid = run_id or f"equpsert-{epoch}"
-    ledger = read_ledger(spark, out_dir)
+    ledger = _ledger_table(out_dir)
     eq_commits = None
     n_vals = 0
-    prior = None
-    if ledger is not None:
-        prior = (
-            ledger.filter(
-                (F.col("status") == EQ_STATUS) & (F.col("run_id") == rid)
-            )
-            .select("n_rows")
-            .limit(1)
-            .collect()
-        )
+    prior = [
+        r
+        for r in (ledger.to_pylist() if ledger is not None else [])
+        if r["status"] == EQ_STATUS and r["run_id"] == rid
+    ]
     if prior:
         n_vals = int(prior[0]["n_rows"])  # first attempt's delete stands
     else:

@@ -12,10 +12,11 @@ against the ledger so completed partitions are never re-encoded.
 
 Crash safety: chunk files and ledger rows are appended in that order, so
 a crash between them leaves orphan chunks. Readers therefore go through
-:func:`read_encoded`, which semi-joins chunks against the ledger — the
-ledger is the commit record, orphan chunks are invisible and get
-re-encoded (idempotent, since partition ids and intra-partition order are
-data-derived and deterministic). The commit key is
+:func:`read_encoded`, which semi-joins chunks against the commit keys
+the driver resolved from the ledger — the ledger is the commit record,
+orphan chunks are invisible and get re-encoded (idempotent, since
+partition ids and intra-partition order are data-derived and
+deterministic). The commit key is
 ``(part_id, attempt_id)`` — every encode attempt stamps a fresh unique
 ``attempt_id`` on the chunk rows it writes and on the ledger rows it
 appends — so when a crashed attempt's orphan chunks share a ``part_id``
@@ -23,6 +24,13 @@ with the successful re-encode, only the committed attempt's copy is ever
 visible (a part_id-only join would resurface the orphans as duplicate
 rows the moment the partition commits). Chunks/ledger rows from stores
 written before ``attempt_id`` existed read as null and join leniently.
+
+The ledger is small metadata, so this module alone reads it: one
+pyarrow pass on the driver (:func:`ledger_state`), cached on the
+directory signature, answers every snapshot, epoch and commit-meta
+question — live commit keys at an epoch, staged WAP keys, delete
+commits, the next epoch — without a Spark job. :func:`read_ledger`
+serves the same normalized rows to the Spark-side rollups.
 
 Storage is a parquet directory per table (append = new files), which is
 exactly the commit model an Iceberg catalog would make transactional on a
@@ -32,20 +40,43 @@ real cluster; the layout and join logic are Iceberg-ready (swap
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import uuid
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from choetl_spark.engine import EncodeConfig, column_manifest, encode_dataframe
 from choetl_spark.partitioning import plan_partitions
 
-LEDGER_SCHEMA_DDL = (
-    "part_id long, fingerprint long, n_rows long, raw_bytes long, "
-    "encoded_bytes long, n_chunks long, codec_map string, run_id string, "
-    "run_seq long, status string, attempt_id string"
+LEDGER_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int64()), ("fingerprint", pa.int64()),
+        ("n_rows", pa.int64()), ("raw_bytes", pa.int64()),
+        ("encoded_bytes", pa.int64()), ("n_chunks", pa.int64()),
+        ("codec_map", pa.string()), ("run_id", pa.string()),
+        ("run_seq", pa.int64()), ("status", pa.string()),
+        ("attempt_id", pa.string()),
+    ]
 )
+LEDGER_SCHEMA_DDL = ", ".join(
+    f"{f.name} {'long' if pa.types.is_int64(f.type) else 'string'}"
+    for f in LEDGER_SCHEMA
+)
+
+# ledger statuses that are visible commits — "staged" (a WAP run awaiting
+# its audit) and "aborted" (a failed audit) are not
+_COMMITTED = ("done", "delete", "eqdelete", "retired")
+
+
+class LedgerReadError(RuntimeError):
+    """The ledger directory holds a parquet file that cannot be read.
+    Never treated as "no ledger": an empty answer would make readers
+    return zero rows and a resume restart at epoch 1."""
 
 
 def _ledger_dir(out_dir: str) -> str:
@@ -141,47 +172,14 @@ def reserved_physicals(manifest: dict | None) -> set[str]:
 
 
 def max_committed_seq(out_dir: str) -> int:
-    """Highest committed ledger epoch, read driver-side with pyarrow
-    (the ledger files are tiny metadata) — lets schema evolution stamp
-    its schema-log snapshots without needing a Spark session."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    try:
-        names = [
-            n for n in os.listdir(_ledger_dir(out_dir))
-            if n.endswith(".parquet")
-        ]
-    except OSError:
-        return 0
-    best = 0
-    for n in names:
-        try:
-            t = pq.read_table(
-                os.path.join(_ledger_dir(out_dir), n),
-                columns=["run_seq", "status"],
-            )
-        except Exception:
-            continue
-        # committed statuses only: a 'staged' (in-flight WAP) or
-        # 'aborted' epoch must not stamp schema-log snapshots, or a
-        # rename during the WAP run lands its snapshot at the staged
-        # epoch and as_of at that epoch (if later published) serves the
-        # pre-rename schema even though the rename preceded publication
-        t = t.filter(
-            pc.is_in(
-                t.column("status"),
-                value_set=pa.array(
-                    ["done", "delete", "eqdelete", "retired"]
-                ),
-            )
-        )
-        if t.num_rows:
-            m = pc.max(t.column("run_seq")).as_py()
-            if m is not None:
-                best = max(best, int(m))
-    return best
+    """Highest committed ledger epoch (0 for no ledger) — lets schema
+    evolution stamp its schema-log snapshots without a Spark session.
+    Committed statuses only: a 'staged' (in-flight WAP) or 'aborted'
+    epoch must not stamp schema-log snapshots, or a rename during the
+    WAP run lands its snapshot at the staged epoch and as_of at that
+    epoch (if later published) serves the pre-rename schema even though
+    the rename preceded publication."""
+    return ledger_state(out_dir)["max_committed_seq"]
 
 
 def manifest_as_of(manifest: dict | None, as_of: int | None) -> dict | None:
@@ -292,19 +290,21 @@ def _chunks_signature(out_dir: str) -> tuple | None:
     return tuple(sig)
 
 
-# {(app_id, abs out_dir): (signature, ledger DataFrame)} — a Spark
-# parquet DataFrame pins the file listing taken at read() time, so a
-# cached frame is exactly "the snapshot the signature names"; any new
-# commit changes the signature and falls through to a fresh read.
+# {abs out_dir: (signature, normalized ledger table, {as_of: state})} —
+# the resolver cache behind _ledger_table / ledger_state. Every commit
+# appends or replaces a ledger file, so any new commit changes the
+# signature and falls through to a fresh read.
+_LEDGER_CACHE: dict[str, tuple] = {}
+# {(app_id, abs out_dir): (signature, ledger DataFrame)} — read_ledger's
+# frame over the cached table, so repeat calls return the same object.
 _LEDGER_DF_CACHE: dict[tuple, tuple] = {}
-# {(app_id, abs out_dir): (signature, meta dict)} — see commit_meta()
-_COMMIT_META_CACHE: dict[tuple, tuple] = {}
 # {(app_id, abs out_dir, as_of, flags): ((ledger_sig, chunks_sig), df)}
 # — the committed-chunk PLAN per visible snapshot. Building it costs
 # ~0.3-0.5 s of driver Py4J round trips (a footer-merging parquet read
-# + ledger semi-join + display remap) with zero Spark jobs; interactive
-# scans (point lookups) pay that per query without this. One entry per
-# (snapshot, read-flags) variant — bounded by the store's epoch count.
+# + commit-key semi-join + display remap) with zero Spark jobs;
+# interactive scans (point lookups) pay that per query without this.
+# One entry per (snapshot, read-flags) variant — bounded by the store's
+# epoch count.
 _ENCODED_DF_CACHE: dict[tuple, tuple] = {}
 
 
@@ -312,107 +312,208 @@ def _cache_key(spark: SparkSession, out_dir: str) -> tuple:
     return (spark.sparkContext.applicationId, os.path.abspath(out_dir))
 
 
-def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = _ledger_dir(out_dir)
-    sig = _ledger_signature(out_dir)
-    key = _cache_key(spark, out_dir)
-    if sig is not None:
-        hit = _LEDGER_DF_CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    try:
-        # mergeSchema: ledger files are tiny and a store resumed across
-        # engine upgrades may mix footers with/without newer columns
-        ledger = spark.read.option("mergeSchema", "true").parquet(path)
-    except Exception:
+def _read_parquet_dir(d: str) -> pa.Table | None:
+    """Schema-lenient union read of every parquet file in ``d`` (the
+    pyarrow analog of ``mergeSchema`` — stores resumed across engine
+    upgrades mix footers with/without newer columns). ``None`` when
+    ``d`` is missing or holds no ``.parquet`` file; dot- and
+    underscore-prefixed names (staging files, ``_SUCCESS``) are not
+    data, the same rule Spark's file listing applies."""
+    paths = sorted(glob.glob(os.path.join(d, "*.parquet")))
+    paths = [p for p in paths if not os.path.basename(p).startswith("_")]
+    if not paths:
         return None
-    if "run_seq" not in ledger.columns:  # pre-snapshot stores: one epoch
-        ledger = ledger.withColumn("run_seq", F.lit(1))
-    else:
-        # a pre-snapshot store resumed after the upgrade: old ledger
-        # files lack the column, parquet schema union reads them as null
-        ledger = ledger.withColumn(
-            "run_seq", F.coalesce(F.col("run_seq"), F.lit(1)).cast("long")
+    return pa.concat_tables(
+        [pq.read_table(p) for p in paths], promote_options="default"
+    )
+
+
+def _ledger_entry(out_dir: str) -> tuple:
+    """``(signature, table, views)`` for the ledger as it stands now —
+    from the cache when the signature is unchanged. ``signature`` is
+    ``None`` when the entry must not be cached (no local listing, or a
+    commit landed mid-read)."""
+    sig = _ledger_signature(out_dir)
+    key = os.path.abspath(out_dir)
+    hit = _LEDGER_CACHE.get(key)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit
+    d = _ledger_dir(out_dir)
+    try:
+        t = _read_parquet_dir(d)
+    except (OSError, pa.ArrowException) as e:
+        raise LedgerReadError(f"cannot read the ledger at {d}: {e}") from e
+    if t is not None:
+        cols = [
+            t.column(f.name).cast(f.type)
+            if f.name in t.column_names
+            else pa.nulls(t.num_rows, f.type)
+            for f in LEDGER_SCHEMA
+        ]
+        i = LEDGER_SCHEMA.get_field_index("run_seq")
+        cols[i] = pc.fill_null(cols[i], 1)  # pre-epoch stores: one epoch
+        t = pa.Table.from_arrays(cols, schema=LEDGER_SCHEMA)
+    if sig is not None and _ledger_signature(out_dir) != sig:
+        sig = None  # a commit landed mid-read: serve it, never cache it
+    entry = (sig, t, {})
+    if sig is not None:
+        _LEDGER_CACHE[key] = entry
+    return entry
+
+
+def _ledger_table(out_dir: str) -> pa.Table | None:
+    """Every ledger row, normalized to :data:`LEDGER_SCHEMA` — the one
+    place legacy rows are filled in: columns missing from files written
+    by older engines read as null, and a null ``run_seq`` (a store
+    predating epochs) reads as epoch 1. ``None`` only when ``_ledger/``
+    is missing or holds no ``.parquet`` file; a file that cannot be
+    read raises :class:`LedgerReadError`."""
+    return _ledger_entry(out_dir)[1]
+
+
+def _ledger_state(t: pa.Table | None, lim: int | None) -> dict:
+    """Resolve one snapshot view of the normalized ledger table (see
+    :func:`ledger_state` for the keys)."""
+    state: dict = {
+        "exists": t is not None,
+        "done": {},
+        "live": {},
+        "retired": set(),
+        "staged_live": {},
+        "delete_ids": set(),
+        "eq_commits": [],
+        "part_seq": {},
+        "done_by_seq": {},
+        "change_seqs": set(),
+        "max_seq": 0,
+        "max_committed_seq": 0,
+        "max_part": -1,
+    }
+    if t is None:
+        return state
+    rows = list(
+        zip(
+            *(
+                t.column(c).to_pylist()
+                for c in ("part_id", "attempt_id", "run_seq", "status",
+                          "codec_map")
+            )
         )
+    )
+    state["max_seq"] = max((r[2] for r in rows), default=0)
+    state["max_committed_seq"] = max(
+        (r[2] for r in rows if r[3] in _COMMITTED), default=0
+    )
+    state["max_part"] = max(
+        (r[0] for r in rows if r[0] is not None), default=-1
+    )
+    # a staged key awaits its WAP verdict until an "aborted" row or a
+    # "done" re-commit (the publish) names the same commit key
+    settled = {(r[0], r[1]) for r in rows if r[3] in ("aborted", "done")}
+    for p, a, s, st, cmap in rows:
+        if st == "staged" and (p, a) not in settled:
+            state["staged_live"].setdefault(p, set()).add(a)
+        if lim is not None and s > lim:
+            continue
+        if st == "done":
+            state["done"].setdefault(p, set()).add(a)
+            state["done_by_seq"].setdefault(s, {}).setdefault(
+                p, set()
+            ).add(a)
+            if s < state["part_seq"].get(p, s + 1):
+                state["part_seq"][p] = s
+        elif st == "retired":
+            state["retired"].add(p)
+        elif st == "delete":
+            state["delete_ids"].add(a)
+        elif st == "eqdelete":
+            # codec_map carries the delete's key column name
+            state["eq_commits"].append((a, s, cmap))
+        if st in ("delete", "eqdelete", "retired"):
+            state["change_seqs"].add(s)
+    state["eq_commits"].sort(key=lambda c: c[1])
+    state["live"] = {
+        p: a for p, a in state["done"].items() if p not in state["retired"]
+    }
+    return state
+
+
+def ledger_state(out_dir: str, as_of: int | None = None) -> dict:
+    """The store's snapshot resolver: every ledger question a reader or
+    writer asks, answered driver-side from one pyarrow read of the
+    ledger files, cached on :func:`_ledger_signature` (zero Spark jobs;
+    a commit invalidates it by adding a ledger file).
+
+    Keys counting only rows at ``run_seq <= as_of`` (``None`` = every
+    row): ``done`` — ``{part_id: attempt_ids}`` of every done row;
+    ``live`` — the same minus ``retired`` parts, the commit keys
+    readers semi-join chunks against; ``delete_ids`` — committed
+    positional deletes; ``eq_commits`` — ``[(delete_id, run_seq, key
+    column)]`` ordered by epoch; ``part_seq`` — each part's first done
+    epoch (the equality-delete data-seq); ``done_by_seq`` and
+    ``change_seqs`` — done keys per epoch and the epochs holding
+    delete/eqdelete/retired rows (the stream reader's view).
+
+    Keys over every row regardless of ``as_of``: ``exists``;
+    ``staged_live`` — WAP keys still awaiting publish or abort;
+    ``max_seq`` (staged and aborted epochs included — see
+    :func:`next_epoch`); ``max_committed_seq``; ``max_part``.
+
+    An ``as_of`` below the expiry floor raises. The dict is shared by
+    every caller of the same snapshot: treat it as read-only."""
+    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
+        raise ValueError(
+            f"snapshot as_of={as_of} has been expired; the oldest "
+            f"readable epoch is {min_time_travel_seq(out_dir)} "
+            "(expire_snapshots reclaimed earlier history)"
+        )
+    _, t, views = _ledger_entry(out_dir)
+    lim = None if as_of is None else int(as_of)
+    if lim not in views:
+        views[lim] = _ledger_state(t, lim)
+    return views[lim]
+
+
+def next_epoch(out_dir: str) -> int:
+    """The epoch the next commit takes: one past the highest
+    ``run_seq`` on ANY ledger row — staged and aborted epochs included,
+    so no epoch is ever reused. Every writer allocates here."""
+    return ledger_state(out_dir)["max_seq"] + 1
+
+
+def read_ledger(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The normalized ledger rows (:func:`_ledger_table`) as a Spark
+    frame, for rollups that aggregate them in Spark; ``None`` when the
+    store has no ledger. Repeat calls for an unchanged ledger return
+    the same object."""
+    sig, t, _ = _ledger_entry(out_dir)
+    if t is None:
+        return None
+    key = _cache_key(spark, out_dir)
+    hit = _LEDGER_DF_CACHE.get(key)
+    if sig is not None and hit is not None and hit[0] == sig:
+        return hit[1]
+    ledger = spark.createDataFrame(t)
     if sig is not None:
         _LEDGER_DF_CACHE[key] = (sig, ledger)
     return ledger
 
 
-def commit_meta(spark: SparkSession, out_dir: str) -> dict:
-    """Tiny driver-cached summary of the ledger's commit rows — the
-    per-scan metadata questions ("are there delete commits?", "which
-    equality-delete commits exist?", "has anything been ingested?")
-    answered with ZERO Spark jobs after the first read of a given store
-    version. Keyed on :func:`_ledger_signature`, so invalidation is
-    automatic: every commit appends or rewrites ledger files. Remote
-    stores (no local listing) recompute each call — correct, just not
-    cached.
-
-    Returns ``{"exists", "has_done", "delete_seqs", "eq_commits"}``
-    where ``delete_seqs`` is the (small — one per delete call) sorted
-    list of positional-delete commit epochs and ``eq_commits`` is
-    ``[(attempt_id, run_seq, key_col)]`` for equality deletes. The two
-    collects behind them are O(delete commits), never O(partitions),
-    and run once per store version instead of once per scan — the
-    Iceberg-client metadata-caching move (scan planning reads the
-    snapshot pointer, not the table)."""
-    sig = _ledger_signature(out_dir)
-    key = _cache_key(spark, out_dir)
-    if sig is not None:
-        hit = _COMMIT_META_CACHE.get(key)
-        if hit is not None and hit[0] == sig:
-            return hit[1]
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
-        meta = {
-            "exists": False,
-            "has_done": False,
-            "delete_seqs": [],
-            "eq_commits": [],
-        }
-    else:
-        rows = (
-            ledger.filter(
-                F.col("status").isin("delete", "eqdelete")
-                | (F.col("status") == "done")
-            )
-            .groupBy("status")
-            .agg(
-                F.count("*").alias("n"),
-                # delete/eqdelete commits are one ledger row per call —
-                # tiny; "done" rows are O(partitions) and are NOT
-                # collected (only counted)
-                F.collect_list(
-                    F.when(
-                        F.col("status").isin("delete", "eqdelete"),
-                        F.struct("attempt_id", "run_seq", "codec_map"),
-                    )
-                ).alias("commits"),
-            )
-            .collect()
-        )
-        by_status = {r["status"]: r for r in rows}
-        meta = {
-            "exists": True,
-            "has_done": by_status.get("done", {"n": 0})["n"] > 0,
-            "delete_seqs": sorted(
-                int(c["run_seq"])
-                for c in by_status.get("delete", {"commits": []})["commits"]
-            ),
-            "eq_commits": sorted(
-                (
-                    (c["attempt_id"], int(c["run_seq"]), c["codec_map"])
-                    for c in by_status.get("eqdelete", {"commits": []})[
-                        "commits"
-                    ]
-                ),
-                key=lambda t: t[1],
-            ),
-        }
-    if sig is not None:
-        _COMMIT_META_CACHE[key] = (sig, meta)
-    return meta
+def _write_ledger_file(out_dir: str, table: pa.Table, name: str) -> None:
+    """Append one pyarrow-written ledger file atomically: it is written
+    under a dot-prefixed name (invisible to every ledger reader) and
+    renamed into place, so a crash mid-write never leaves a torn
+    visible file — the same discipline as :func:`write_manifest`."""
+    d = _ledger_dir(out_dir)
+    os.makedirs(d, exist_ok=True)
+    tmp = os.path.join(d, f".{name}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+        raise
 
 
 def _read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -423,25 +524,10 @@ def _read_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def staged_live_rows(ledger: DataFrame, run_id: str | None = None) -> DataFrame:
-    """Ledger rows staged by a write-audit-publish run and still awaiting
-    its verdict: status "staged" minus commit keys that were aborted and
-    minus keys already re-committed as "done" (a published stage must not
-    read twice). See :mod:`choetl_spark.refs` for the WAP flow."""
-    staged = ledger.filter(F.col("status") == "staged")
-    if run_id is not None:
-        staged = staged.filter(F.col("run_id") == run_id)
-    dead = ledger.filter(F.col("status").isin("aborted", "done")).select(
-        "part_id", "attempt_id"
-    )
-    return staged.join(
-        F.broadcast(dead.distinct()), ["part_id", "attempt_id"], "left_anti"
-    )
-
-
-def _commit_join(chunks: DataFrame, done: DataFrame, how: str) -> DataFrame:
-    """Join chunk rows against committed ledger rows on the commit key
-    ``(part_id, attempt_id)``.
+def _commit_join(chunks: DataFrame, keys: dict, how: str) -> DataFrame:
+    """Join chunk rows against resolved commit keys ``{part_id:
+    attempt_ids}`` (a :func:`ledger_state` map), shipped as a broadcast
+    local frame.
 
     Lenient on nulls (legacy stores predating attempt_id on either
     side); strict when both sides carry one — that strictness is what
@@ -449,13 +535,15 @@ def _commit_join(chunks: DataFrame, done: DataFrame, how: str) -> DataFrame:
     partition commits under a different attempt (otherwise every row
     would decode twice). ``how`` is "semi" (readers) or "left"
     (maintenance, marking)."""
-    commits = done.select(
-        F.col("part_id").alias("_c_part"),
-        (
-            F.col("attempt_id") if "attempt_id" in done.columns
-            else F.lit(None).cast("string")
-        ).alias("_c_att"),
-    ).distinct()
+    pairs = [(p, a) for p, atts in keys.items() for a in atts]
+    commits = chunks.sparkSession.createDataFrame(
+        pa.table(
+            {
+                "_c_part": pa.array([p for p, _ in pairs], pa.int64()),
+                "_c_att": pa.array([a for _, a in pairs], pa.string()),
+            }
+        )
+    )
     if "attempt_id" not in chunks.columns:
         chunks = chunks.withColumn("attempt_id", F.lit(None).cast("string"))
     cond = (F.col("part_id") == F.col("_c_part")) & (
@@ -527,14 +615,9 @@ def read_encoded(
         from choetl_spark.refs import resolve_ref
 
         as_of = resolve_ref(out_dir, ref)
-    if as_of is not None and int(as_of) < min_time_travel_seq(out_dir):
-        raise ValueError(
-            f"snapshot as_of={as_of} has been expired; the oldest "
-            f"readable epoch is {min_time_travel_seq(out_dir)} "
-            "(expire_snapshots reclaimed earlier history)"
-        )
     lsig = _ledger_signature(out_dir)
     csig = _chunks_signature(out_dir)
+    state = ledger_state(out_dir, as_of)  # refuses an expired as_of
     # the manifest drives _display_remap, and rename_column/drop_column
     # rewrite ONLY that sidecar — no ledger/chunk file changes — so it
     # must be part of the snapshot signature or a cached plan would keep
@@ -555,24 +638,15 @@ def read_encoded(
         if hit is not None and hit[0] == (lsig, csig, msig):
             return hit[1]
     chunks = _read_chunks(spark, out_dir)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    if not state["exists"]:
         return chunks.limit(0)
-    done = ledger.filter(F.col("status") == "done")
-    if as_of is not None:
-        done = done.filter(F.col("run_seq") <= int(as_of))
+    keys = dict(state["done"])
     if include_staged:
-        done = done.unionByName(staged_live_rows(ledger))
+        for p, atts in state["staged_live"].items():
+            keys[p] = keys.get(p, set()) | atts
     if not include_retired:
-        retired = ledger.filter(F.col("status") == "retired")
-        if as_of is not None:
-            retired = retired.filter(F.col("run_seq") <= int(as_of))
-        done = done.join(
-            F.broadcast(retired.select("part_id").distinct()),
-            "part_id",
-            "left_anti",
-        )
-    out = _commit_join(chunks, done, "semi")
+        keys = {p: a for p, a in keys.items() if p not in state["retired"]}
+    out = _commit_join(chunks, keys, "semi")
     if not raw_columns:
         # as_of readers resolve display names against the SNAPSHOT's
         # schema (manifest_as_of) — except when the caller is internal
@@ -754,23 +828,23 @@ def _orphan_chunk_files(spark: SparkSession, out_dir: str) -> list | None:
     Metadata-scale Spark pass (distinct (file, commit-key) tuples);
     only the file list reaches the driver."""
     chunks = _read_chunks(spark, out_dir)
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["exists"]:
         return None
     # staged-but-unpublished WAP partitions are committed (their audit is
     # pending, not their write); ABORTED stages drop out of the live set,
     # so their files become orphans here — that is how vacuum reclaims a
     # failed audit's bytes
-    done = ledger.filter(F.col("status") == "done").unionByName(
-        staged_live_rows(ledger)
-    )
+    keys = dict(state["done"])
+    for p, atts in state["staged_live"].items():
+        keys[p] = keys.get(p, set()) | atts
     pairs = chunks.select(
         F.col("_metadata.file_path").alias("file"),
         "part_id",
         *(["attempt_id"] if "attempt_id" in chunks.columns else []),
     ).distinct()
     per_file = (
-        _commit_join(pairs, done, "left")
+        _commit_join(pairs, keys, "left")
         .groupBy("file")
         .agg(
             F.max(
@@ -962,13 +1036,11 @@ def read_changes(
     from choetl_spark.eqdeletes import all_delete_positions
     from choetl_spark.engine import decode_dataframe
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["exists"]:
         raise ValueError(f"no committed store at {out_dir}")
     if to_seq is None:
-        to_seq = (
-            ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-        )
+        to_seq = state["max_seq"]
     from_seq, to_seq = int(from_seq), int(to_seq)
     if from_seq > 0 and from_seq < min_time_travel_seq(out_dir):
         raise ValueError(
@@ -977,18 +1049,7 @@ def read_changes(
         )
 
     def visible(seq: int) -> set[int]:
-        done = ledger.filter(
-            (F.col("status") == "done") & (F.col("run_seq") <= seq)
-        ).select("part_id")
-        ret = ledger.filter(
-            (F.col("status") == "retired") & (F.col("run_seq") <= seq)
-        ).select("part_id").distinct()
-        return {
-            r["part_id"]
-            for r in done.join(
-                F.broadcast(ret), "part_id", "left_anti"
-            ).collect()
-        }
+        return set(ledger_state(out_dir, seq)["live"])
 
     v_from = visible(from_seq) if from_seq > 0 else set()
     v_to = visible(to_seq)
@@ -1636,11 +1697,7 @@ def compact_store(
     """
     import math
 
-    ledger = read_ledger(spark, out_dir)
-    if (
-        ledger is None
-        or ledger.filter(F.col("status") == "done").limit(1).count() == 0
-    ):
+    if not ledger_state(out_dir)["done"]:
         # no commit record yet: a first run may be mid-flight and its
         # chunks (all "orphan" by the semi-join) must not be rewritten
         # away — same guard as vacuum()
@@ -1916,20 +1973,16 @@ def encode_with_resume(
             hot_factor=cfg.hot_factor,
             salt_buckets=cfg.salt_buckets,
         )
-    ledger = read_ledger(spark, out_dir)
+    state = ledger_state(out_dir)
+    run_seq = next_epoch(out_dir)
+    # staged-live partitions occupy their part_id (a crashed staged run
+    # resumes without re-encoding; publish/abort settle them)
+    occupied = sorted({*state["done"], *state["staged_live"]})
     already = 0
-    run_seq = 1
-    if ledger is not None:
-        run_seq = (
-            ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-        ) + 1  # next commit epoch (metadata-scale agg)
-        # staged-live partitions occupy their part_id (a crashed staged
-        # run resumes without re-encoding; publish/abort settle them)
-        done = (
-            ledger.filter(F.col("status") == "done")
-            .unionByName(staged_live_rows(ledger))
-            .select("part_id")
-            .distinct()
+    pending = planned
+    if occupied:
+        done = spark.createDataFrame(
+            pa.table({"part_id": pa.array(occupied, pa.int64())})
         )
         already = (
             planned.select("part_id")
@@ -1938,8 +1991,6 @@ def encode_with_resume(
             .count()
         )
         pending = planned.join(F.broadcast(done), "part_id", "left_anti")
-    else:
-        pending = planned
     # manifest sidecar BEFORE the chunk write, MERGED with any existing
     # manifest (schema evolution: a later ingest run may add columns —
     # the Iceberg add-column contract; partitions encoded before the
@@ -2203,15 +2254,9 @@ def encode_with_resume(
             LEDGER_SCHEMA_DDL,
         )
         ledger_rows = ledger_rows.unionByName(eq_rows)
-    before = ledger.count() if ledger is not None else 0
     ledger_rows.write.mode("append").parquet(_ledger_dir(out_dir))
-    newly = (
-        read_ledger(spark, out_dir).count()
-        - before
-        - len(retire_part_ids or [])
-        - len(delete_commits or [])
-        - len(eq_delete_commits or [])
-    )
+    after = ledger_state(out_dir)["staged_live" if staged else "done"]
+    newly = sum(attempt_id in atts for atts in after.values())
     return {
         "run_id": run_id,
         "partitions_already_done": already,

@@ -31,7 +31,7 @@ the capability a 10^12-document pipeline needs so a bad crawl batch is
 audited and dropped BEFORE consumers can read it.
 
 Scale shape: every function here is metadata-only — O(refs) JSON on the
-driver plus ledger-table aggregates (tiny parquet); nothing touches
+driver plus the driver-side ledger resolver (tiny parquet); nothing touches
 chunk payloads except ``read_staged`` (a normal pruned decode of just
 the staged partitions).
 """
@@ -42,7 +42,7 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _refs_path(out_dir: str) -> str:
@@ -66,26 +66,21 @@ def _write_refs(out_dir: str, refs: dict) -> None:
     os.replace(tmp, _refs_path(out_dir))
 
 
-def _latest_seq(spark: SparkSession, out_dir: str) -> int:
-    from choetl_spark.ledger import read_ledger
+def _validate_seq(out_dir: str, seq: int | None) -> int:
+    """``seq`` (default: the latest epoch) if it names a readable epoch."""
+    from choetl_spark.ledger import ledger_state, min_time_travel_seq
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    state = ledger_state(out_dir)
+    if not state["exists"]:
         raise ValueError(f"no ledger at {out_dir}; nothing to reference")
-    return ledger.agg(F.max("run_seq")).collect()[0][0] or 0
-
-
-def _validate_seq(spark: SparkSession, out_dir: str, seq: int) -> int:
-    from choetl_spark.ledger import min_time_travel_seq
-
-    seq = int(seq)
+    latest = state["max_seq"]
+    seq = latest if seq is None else int(seq)
     floor = min_time_travel_seq(out_dir)
     if seq < floor:
         raise ValueError(
             f"epoch {seq} has been expired; the oldest readable epoch "
             f"is {floor}"
         )
-    latest = _latest_seq(spark, out_dir)
     if seq > latest:
         raise ValueError(f"epoch {seq} does not exist yet (latest {latest})")
     return seq
@@ -97,9 +92,7 @@ def create_tag(
     """Create an IMMUTABLE named pointer at epoch ``seq`` (default: the
     latest). Refuses to overwrite an existing ref — drop it first (the
     Iceberg tag contract: a tag names one snapshot forever)."""
-    seq = _validate_seq(
-        spark, out_dir, seq if seq is not None else _latest_seq(spark, out_dir)
-    )
+    seq = _validate_seq(out_dir, seq)
     refs = _read_refs(out_dir)
     if name in refs:
         raise ValueError(
@@ -115,9 +108,7 @@ def create_branch(
     spark: SparkSession, out_dir: str, name: str, seq: int | None = None
 ) -> dict:
     """Create a MOVABLE named pointer (see :func:`update_branch`)."""
-    seq = _validate_seq(
-        spark, out_dir, seq if seq is not None else _latest_seq(spark, out_dir)
-    )
+    seq = _validate_seq(out_dir, seq)
     refs = _read_refs(out_dir)
     if name in refs:
         raise ValueError(f"ref {name!r} already exists; drop_ref it first")
@@ -136,7 +127,7 @@ def update_branch(
         raise ValueError(f"no ref named {name!r}")
     if refs[name]["type"] != "branch":
         raise ValueError(f"ref {name!r} is a tag; tags are immutable")
-    seq = _validate_seq(spark, out_dir, seq)
+    seq = _validate_seq(out_dir, seq)
     refs[name]["run_seq"] = seq
     _write_refs(out_dir, refs)
     return {"name": name, "type": "branch", "run_seq": seq}
@@ -182,10 +173,33 @@ def list_refs(spark: SparkSession, out_dir: str) -> DataFrame:
 # ---------------------------------------------------------------- WAP --
 
 
-def _staged_rows(ledger: DataFrame, run_id: str | None = None) -> DataFrame:
-    from choetl_spark.ledger import staged_live_rows
+def _staged_rows(out_dir: str, run_id: str | None = None) -> list[dict]:
+    """Ledger rows staged by a write-audit-publish run (or by every run)
+    and still awaiting its verdict — the resolver's ``staged_live``
+    keys, with each row's metrics."""
+    from choetl_spark.ledger import _ledger_table, ledger_state
 
-    return staged_live_rows(ledger, run_id)
+    live = ledger_state(out_dir)["staged_live"]
+    t = _ledger_table(out_dir)
+    return [
+        r
+        for r in (t.to_pylist() if t is not None else [])
+        if r["status"] == "staged"
+        and r["attempt_id"] in live.get(r["part_id"], ())
+        and (run_id is None or r["run_id"] == run_id)
+    ]
+
+
+def _run_statuses(out_dir: str, run_id: str) -> set[str]:
+    """Every ledger status a run's rows carry."""
+    import pyarrow.compute as pc
+
+    from choetl_spark.ledger import _ledger_table
+
+    t = _ledger_table(out_dir)
+    if t is None:
+        return set()
+    return set(t.filter(pc.equal(t["run_id"], run_id))["status"].to_pylist())
 
 
 def read_staged(
@@ -202,17 +216,18 @@ def read_staged(
         _commit_join,
         _display_remap,
         _read_chunks,
-        read_ledger,
+        ledger_state,
         read_manifest,
     )
 
-    ledger = read_ledger(spark, out_dir)
     chunks = _read_chunks(spark, out_dir)
-    if ledger is None:
+    if not ledger_state(out_dir)["exists"]:
         return chunks.limit(0)
-    staged = _staged_rows(ledger, run_id)
+    keys: dict[int, set] = {}
+    for r in _staged_rows(out_dir, run_id):
+        keys.setdefault(r["part_id"], set()).add(r["attempt_id"])
     manifest = read_manifest(out_dir)
-    enc = _display_remap(_commit_join(chunks, staged, "semi"), manifest)
+    enc = _display_remap(_commit_join(chunks, keys, "semi"), manifest)
     return decode_dataframe(enc, columns=columns, manifest=manifest)
 
 
@@ -223,25 +238,29 @@ def publish_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
     the append they see the old table, after it the new one; a crash
     in between leaves the run staged (re-run to finish). Idempotent:
     an already-published run returns without a second commit."""
-    from choetl_spark.ledger import _ledger_dir, read_ledger
+    from choetl_spark.ledger import (
+        LEDGER_SCHEMA_DDL,
+        _ledger_dir,
+        ledger_state,
+        next_epoch,
+    )
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    if not ledger_state(out_dir)["exists"]:
         raise ValueError(f"no ledger at {out_dir}")
-    mine = ledger.filter(F.col("run_id") == run_id)
-    staged = _staged_rows(ledger, run_id).collect()
+    staged = _staged_rows(out_dir, run_id)
     if not staged:
-        if mine.filter(F.col("status") == "done").limit(1).count() > 0:
+        statuses = _run_statuses(out_dir, run_id)
+        if "done" in statuses:
             return {
                 "run_id": run_id,
                 "already_published": True,
                 "partitions_published": 0,
                 "publish_epoch": None,
             }
-        if mine.filter(F.col("status") == "aborted").limit(1).count() > 0:
+        if "aborted" in statuses:
             raise ValueError(f"staged run {run_id!r} was aborted")
         raise ValueError(f"no staged partitions for run {run_id!r}")
-    epoch = (ledger.agg(F.max("run_seq")).collect()[0][0] or 0) + 1
+    epoch = next_epoch(out_dir)
     rows = [
         (
             r["part_id"], r["fingerprint"], r["n_rows"], r["raw_bytes"],
@@ -250,8 +269,6 @@ def publish_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
         )
         for r in staged
     ]
-    from choetl_spark.ledger import LEDGER_SCHEMA_DDL
-
     # one file, one append: the publish is a single atomic metadata move
     spark.createDataFrame(rows, LEDGER_SCHEMA_DDL).coalesce(1).write.mode(
         "append"
@@ -273,19 +290,17 @@ def abort_staged(spark: SparkSession, out_dir: str, run_id: str) -> dict:
     from choetl_spark.ledger import (
         LEDGER_SCHEMA_DDL,
         _ledger_dir,
-        read_ledger,
+        ledger_state,
     )
 
-    ledger = read_ledger(spark, out_dir)
-    if ledger is None:
+    if not ledger_state(out_dir)["exists"]:
         raise ValueError(f"no ledger at {out_dir}")
-    mine = ledger.filter(F.col("run_id") == run_id)
-    if mine.filter(F.col("status") == "done").limit(1).count() > 0:
+    if "done" in _run_statuses(out_dir, run_id):
         raise ValueError(
             f"run {run_id!r} is already published; use rollback_to / "
             "rewrite, not abort"
         )
-    staged = _staged_rows(ledger, run_id).collect()
+    staged = _staged_rows(out_dir, run_id)
     if not staged:
         return {"run_id": run_id, "partitions_aborted": 0}
     rows = [

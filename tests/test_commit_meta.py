@@ -1,4 +1,4 @@
-"""Driver-side ledger-metadata cache (ledger.commit_meta / the cached
+"""Driver-side ledger resolver cache (ledger.ledger_state / the cached
 read_ledger): the per-scan metadata questions must cost zero Spark jobs
 on a cache hit, and any commit must invalidate the cache (signature =
 ledger directory listing — the Iceberg metadata.json-pointer analog)."""
@@ -8,8 +8,8 @@ from __future__ import annotations
 from choetl_spark.deletes import delete_where, read_delete_positions
 from choetl_spark.engine import EncodeConfig
 from choetl_spark.ledger import (
-    commit_meta,
     encode_with_resume,
+    ledger_state,
     read_ledger,
     scan_encoded,
 )
@@ -29,11 +29,11 @@ def _ingest(spark, tmp_path, n=300):
 
 def test_commit_meta_cached_and_invalidated_by_commits(spark, tmp_path):
     out, pages = _ingest(spark, tmp_path)
-    m1 = commit_meta(spark, out)
-    assert m1["exists"] and m1["has_done"]
-    assert m1["delete_seqs"] == [] and m1["eq_commits"] == []
+    m1 = ledger_state(out)
+    assert m1["exists"] and m1["done"]
+    assert m1["delete_ids"] == set() and m1["eq_commits"] == []
     # cache hit: identical object back, no recompute
-    assert commit_meta(spark, out) is m1
+    assert ledger_state(out) is m1
     # the cached ledger DataFrame is reused too
     led1 = read_ledger(spark, out)
     assert read_ledger(spark, out) is led1
@@ -41,9 +41,9 @@ def test_commit_meta_cached_and_invalidated_by_commits(spark, tmp_path):
     # a delete COMMIT must invalidate both caches via the signature
     target = pages.select("url").limit(1).collect()[0][0]
     delete_where(spark, out, equals={"url": target})
-    m2 = commit_meta(spark, out)
+    m2 = ledger_state(out)
     assert m2 is not m1
-    assert len(m2["delete_seqs"]) == 1
+    assert len(m2["delete_ids"]) == 1
     assert read_ledger(spark, out) is not led1
 
     # the new snapshot is what readers see
@@ -66,8 +66,8 @@ def test_no_delete_store_skips_tombstone_resolution(spark, tmp_path):
 
 def test_as_of_before_first_delete_returns_none(spark, tmp_path):
     out, pages = _ingest(spark, tmp_path)
-    pre = commit_meta(spark, out)
-    assert pre["delete_seqs"] == []
+    pre = ledger_state(out)
+    assert pre["delete_ids"] == set()
     target = pages.select("url").limit(1).collect()[0][0]
     info = delete_where(spark, out, equals={"url": target})
     # a snapshot strictly before the delete epoch sees no tombstones
